@@ -11,20 +11,22 @@ tests/test_incremental_neardup, tests/test_curate_cli):
   init-corpus  seed the MAINTAINED retained-corpus root from a documents
                parquet, written as an idempotent ``batch_id`` partition
   build-index  materialize the retained corpus's MinHash signature table
-               and exact-dedup key table (idempotent per-batch partitions;
-               ``--batch-id`` defaults to "base" so the root is always
-               fold-safe)
+               and exact-dedup key table, plus one perceptual-hash index
+               per modality given blobs (pipeline.build_hash_index;
+               idempotent per-batch partitions; ``--batch-id`` defaults
+               to "base" so the root is always fold-safe)
   incremental  curate ONE daily batch against the stored indexes —
                O(batch + candidates) — and optionally fold the survivors
                back (``--fold-batch-id``), completing the daily loop in a
                single command
   stream       the cron-free form of that loop: watch an arrivals
                directory as a file-source stream (one micro-batch per
-               file, ``Trigger.AvailableNow``), run the curate+fold body
-               per micro-batch, and keep a DURABLE checkpoint so a rerun
-               processes only files that arrived since the last run;
-               ``--shard-root`` adds the delivery leg (each micro-batch's
-               survivors also land as shard_id/batch_id partitions)
+               file, ``Trigger.AvailableNow``), run the same curate+fold
+               body (``_curate_and_fold``) per micro-batch, and keep a
+               DURABLE checkpoint so a rerun processes only files that
+               arrived since the last run; ``--shard-root`` adds the
+               delivery leg (each micro-batch's survivors also land as
+               shard_id/batch_id partitions)
   compact      maintenance: collapse each fold store's accumulated
                per-day ``batch_id`` partitions into one consolidated
                ``batch_id=base`` partition (small-files hygiene; run
@@ -70,6 +72,12 @@ data files and partition directories under one root); ``init-corpus`` and
 ``build-index``'s default batch id give you that, and the fold step
 REFUSES a root that contains flat data files instead of corrupting it.
 
+The per-modality flags (``--{image,audio,video}-blobs``, the index
+paths, ``--*-benchmark``, ``--*-backend``) and their pairing checks are
+generated from the modality table (operators/multimodal.py:MODALITIES),
+so every modality has the same surface on every subcommand; a fold with
+index paths grows each modality's hash index with the survivors' hashes.
+
 Each run writes parquet and prints ONE JSON summary line (rows kept,
 paths), cron-friendly like pipeline.main.
 """
@@ -79,6 +87,18 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import sys
+
+from data_pipeline_team5_spark.operators.multimodal import MODALITIES
+
+# Per-modality CLI surface beyond the modality table: decode-backend
+# choices (audio has no --audio-backend flag — WAV is its one decoder),
+# and build-index's bare --perceptual spelling of the image index flag.
+_BACKEND_CHOICES = {
+    "image": ("bmp", "png", "fake", "pil"),
+    "video": ("container", "fake"),
+}
+_BUILD_INDEX_FLAG = {"image": "perceptual"}
 
 
 def _refuse_flat_root(path: str, what: str) -> None:
@@ -130,20 +150,18 @@ def _write_fold_manifest(out_root: str, fold: str, payload: dict) -> None:
             os.unlink(tmp)
 
 
-def _quality_drift_probe(
-    new,
-    frozen_quality: dict,
-    bench_docs,
-    decon_bloom_min_grams,
-    bench_gram_count,
-    decon_n: int,
-) -> tuple[dict, dict]:
-    """(drift, hot): per-signal TV of a batch's score distribution vs
-    the frozen model's stored snapshot, over the batch's filter-stage
-    pool (the same pool the full-run snapshot was taken over, with the
-    same knobs) — shared by the incremental and stream paths so the
-    guard cannot diverge between them. ``hot`` is the over-threshold
-    subset."""
+def _quality_drift_probe(new, inc_kw: dict, what: str):
+    """Frozen-model drift guard (round 15, VERDICT r14 #4): ``(drift,
+    hot)`` — per-signal TV of a batch's score distribution vs the frozen
+    model's stored snapshot, over the batch's filter-stage pool (the
+    same pool the full-run snapshot was taken over, with the same
+    knobs); ``hot`` is the over-threshold subset, and a hot batch is
+    FLAGGED on stderr naming ``what`` — a stale/mismatched model is
+    never silently applied. None without a model snapshot. Batch-sized
+    work; ``inc_kw`` are the curate_incremental_batch keywords."""
+    frozen = inc_kw["quality_model"]
+    if frozen is None or not frozen.get("score_hist"):
+        return None
     from data_pipeline_team5_spark.operators.quality import (
         QUALITY_DRIFT_WARN_TV,
         quality_score_drift,
@@ -153,18 +171,27 @@ def _quality_drift_probe(
     drift = quality_score_drift(
         _curation_filter_stage(
             new,
-            benchmark_docs=bench_docs,
-            decon_bloom_min_grams=decon_bloom_min_grams,
-            bench_gram_count=bench_gram_count,
-            decon_n=decon_n,
+            benchmark_docs=inc_kw["benchmark_docs"],
+            decon_bloom_min_grams=inc_kw["decon_bloom_min_grams"],
+            bench_gram_count=inc_kw["bench_gram_count"],
+            decon_n=inc_kw["decon_n"],
         ),
-        frozen_quality,
+        frozen,
     )
     hot = {
         s: tv
         for s, tv in drift.items()
         if tv is not None and tv > QUALITY_DRIFT_WARN_TV
     }
+    if hot:
+        print(
+            f"WARNING: frozen quality model looks stale for {what} — "
+            f"score-distribution TV {hot} exceeds {QUALITY_DRIFT_WARN_TV} "
+            "vs the full run's snapshot (refit via `full "
+            "--quality-model-out`, or confirm the batch really is from a "
+            "shifted source)",
+            file=sys.stderr,
+        )
     return drift, hot
 
 
@@ -221,16 +248,201 @@ def _langid_mixture_probe(
     return mixture, tv, tv is not None and tv > LANGID_DRIFT_WARN_TV
 
 
+def _index_flag(m, cmd: str) -> str:
+    """Modality ``m``'s index-path flag in ``cmd``, without the ``--``."""
+    if cmd == "build-index":
+        return _BUILD_INDEX_FLAG.get(m.name, f"{m.index}-index")
+    return f"{m.index}-index"
+
+
+def _add_modality_flags(p: argparse.ArgumentParser, cmd: str) -> None:
+    """Register ``cmd``'s per-modality flags, one group per modality
+    table entry: ``--<name>-blobs``; the index path (build-index,
+    incremental, stream); ``--<name>-benchmark`` (full, incremental,
+    stream); ``--<name>-backend`` where the modality has a choice of
+    decoders."""
+    for m in MODALITIES.values():
+        n, idx = m.name, _index_flag(m, cmd)
+        if cmd == "full":
+            blobs_help = (
+                f"(doc_id, blob) parquet of the corpus's {n} payloads: "
+                "perceptual near-dup pairs union into the dedup "
+                f"component graph, so {n}-duplicate docs collapse under "
+                "the same --survivor-policy as text near-dups"
+            )
+        elif cmd == "build-index":
+            blobs_help = (
+                f"with --{idx}: (doc_id, blob) parquet to hash into the "
+                f"{n} index (one decode pass — the cost the daily loop "
+                "never repays)"
+            )
+        else:
+            blobs_help = (
+                f"(doc_id, blob) parquet covering the batch's {n} "
+                f"payloads; requires --{idx} and/or --{n}-benchmark. "
+                f"Each batch is {n}-deduped against the retained corpus "
+                "through the stored hash index — the corpus's payloads "
+                "are never re-decoded"
+            )
+        p.add_argument(f"--{n}-blobs", default=None, help=blobs_help)
+        if cmd == "build-index":
+            p.add_argument(f"--{idx}", default=None,
+                           help=f"{n}-hash index path (2 BIGINTs/doc); "
+                                f"requires --{n}-blobs")
+        elif cmd != "full":
+            p.add_argument(f"--{idx}", default=None,
+                           help=f"{n}-hash index root (from build-index "
+                                f"--{_index_flag(m, 'build-index')}); "
+                                "each folded batch's survivors' hashes "
+                                "fold in after")
+        if cmd == "full":
+            p.add_argument(f"--{n}-benchmark", default=None,
+                           help=f"(doc_id, blob) parquet of an eval "
+                                f"benchmark's {n}: docs whose {n} is a "
+                                "perceptual near-dup of any benchmark "
+                                "payload are dropped before dedup (the "
+                                f"{n} twin of --benchmark). Requires "
+                                f"--{n}-blobs")
+        elif cmd != "build-index":
+            p.add_argument(f"--{n}-benchmark", default=None,
+                           help=f"see full --{n}-benchmark; with "
+                                f"--{n}-blobs alone (no --{idx}) the "
+                                f"batch is {n}-DECONTAMINATED only")
+        if n in _BACKEND_CHOICES:
+            p.add_argument(f"--{n}-backend", default=m.backend,
+                           choices=_BACKEND_CHOICES[n],
+                           help=f"{n} decode backend for --{n}-blobs "
+                                f"({m.backend} = the real stdlib decode)")
+
+
+def _modality_kwargs(args, blobs: dict, benches: dict) -> dict:
+    """Every modality leg's keyword arguments for curate_training_data
+    (``full``) or curate_incremental_batch (incremental, stream)."""
+    inc = args.cmd != "full"
+    kw = {}
+    for m in MODALITIES.values():
+        kw[f"{'new_' if inc else ''}{m.name}_blobs"] = blobs[m.name]
+        kw[f"benchmark_{m.name}_blobs"] = benches[m.name]
+        if m.name in _BACKEND_CHOICES:
+            kw[f"{m.name}_backend"] = getattr(args, f"{m.name}_backend")
+        if inc:
+            kw[f"{m.index}_index_path"] = getattr(args, f"{m.index}_index")
+    return kw
+
+
+def _refuse_flat_fold_roots(args) -> None:
+    """:func:`_refuse_flat_root` over every root a fold appends to."""
+    roots = [(args.corpus, "corpus"), (args.sig, "sig"),
+             (args.key, "key"), (args.out, "out")]
+    for m in MODALITIES.values():
+        path = getattr(args, f"{m.index}_index")
+        if path:
+            roots.append((path, f"{m.index}-index"))
+    for path, what in roots:
+        _refuse_flat_root(path, what)
+
+
+def _curate_and_fold(spark, args, new, fold: str, inc_kw: dict, langid):
+    """The daily loop's body, shared by ``incremental --fold-batch-id``
+    and every ``stream`` micro-batch (a micro-batch is the same
+    computation as a batch run): curate ``new`` against the stores,
+    write its assignments as the ``fold`` partition of ``--out`` with
+    bins offset past every other batch, grow the signature, key and
+    modality hash indexes and the corpus with the survivors (and the
+    ``--shard-root`` delivery store when stream has one), and return the
+    fold's manifest row.
+
+    ``langid`` is the frozen ``(models, fill_hist)`` pair or None;
+    ``inc_kw`` are the curate_incremental_batch keywords. The pipeline
+    and writer functions are looked up on their modules at call time,
+    so wrappers installed after import (the benchmark's tracer, test
+    crash injection) are the ones that run."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_team5_spark import pipeline
+    from data_pipeline_team5_spark.sources import writers
+
+    langid_probe = None
+    if langid is not None:
+        # frozen langid fill (round 16): NULL langs filled under the
+        # FULL run's models before the allowlist — never a refit on one
+        # batch's labeled slice; the batch's lang mixture vs the
+        # model's fit-time snapshot goes into the manifest (round 17)
+        from data_pipeline_team5_spark.operators.langid import (
+            LANGID_DRIFT_WARN_TV,
+            fill_missing_lang,
+        )
+
+        filled = fill_missing_lang(new, langid[0])
+        langid_probe = _langid_mixture_probe(filled, langid[1])
+        new = filled.drop("lang_source")
+    corpus = spark.read.parquet(args.corpus)
+    if "batch_id" in corpus.columns:
+        # replay safety: a crashed fold re-run must not see its own
+        # previously folded survivors in the corpus or the indexes
+        corpus = corpus.filter(F.col("batch_id") != fold)
+    out = pipeline.curate_incremental_batch(
+        new, corpus, exclude_batch_id=fold, **inc_kw
+    )
+    # batch-local bins → globally-unique bins: offset past every OTHER
+    # batch's max (excluding this batch id keeps a replay
+    # bitwise-idempotent with the partition overwrite)
+    off = pipeline.next_bin_offset(spark, args.out, exclude_batch_id=fold)
+    written = out.withColumn(
+        "bin_id", F.col("bin_id") + F.lit(off)
+    ).withColumn("batch_id", F.lit(fold))
+    writers.write_parquet_partitioned(written, args.out, "batch_id")
+    kept = _read_fold_kept(spark, args.out, fold, written.schema)
+    manifest = {"fold": fold, "kept": kept.count()}
+    survivors = new.join(kept.select("doc_id"), "doc_id")
+    pipeline.build_signature_index(survivors, args.sig, batch_id=fold)
+    pipeline.build_exact_key_index(survivors, args.key, batch_id=fold)
+    for m in MODALITIES.values():
+        # tomorrow's batch probes today's survivors' hashes, never
+        # their payloads
+        blobs = inc_kw[f"new_{m.name}_blobs"]
+        path = inc_kw[f"{m.index}_index_path"]
+        if blobs is not None and path:
+            pipeline.build_hash_index(
+                blobs.join(kept.select("doc_id"), "doc_id"), path, m.name,
+                backend=inc_kw.get(f"{m.name}_backend"), batch_id=fold,
+            )
+    # the corpus grows too — see module docstring (ADVICE r6 #1)
+    pipeline.append_corpus_batch(survivors, args.corpus, fold)
+    if getattr(args, "shard_root", None):
+        writers.write_training_shards(
+            survivors, args.shard_root, batch_id=fold
+        )
+    drift = _quality_drift_probe(new, inc_kw, f"fold {fold}")
+    if drift is not None:
+        manifest["quality_drift_tv"] = drift[0]
+        manifest["quality_drift_hot"] = sorted(drift[1])
+    if langid_probe is not None:
+        mixture, li_tv, li_hot = langid_probe
+        manifest["langid_mixture"] = mixture
+        manifest["langid_drift_tv"] = li_tv
+        manifest["langid_drift_hot"] = li_hot
+        if li_hot:
+            print(
+                f"WARNING: frozen langid model looks stale for fold "
+                f"{fold} — predicted-lang mixture TV {li_tv:.3f} exceeds "
+                f"{LANGID_DRIFT_WARN_TV} vs the full run's fill snapshot "
+                "(refit via `full --langid-fill --langid-model-out`, or "
+                "confirm the batch really is from a shifted source)",
+                file=sys.stderr,
+            )
+    return manifest
+
+
 def main(argv: list[str] | None = None) -> int:
     from data_pipeline_team5_spark.pipeline import (
         append_corpus_batch,
         build_exact_key_index,
-        build_perceptual_index,
+        build_hash_index,
         build_signature_index,
         compact_fold_stores,
         curate_incremental_batch,
         curate_training_data,
-        next_bin_offset,
     )
     from data_pipeline_team5_spark.operators.dedup import (
         benchmark_gram_count,
@@ -343,54 +555,7 @@ def main(argv: list[str] | None = None) -> int:
                         help="comma-separated source names, best first "
                              "(source_rank policy); unlisted sources rank "
                              "equal-worst")
-    p_full.add_argument("--image-blobs", default=None,
-                        help="(doc_id, blob) parquet for corpora with an "
-                             "image column: perceptual near-dup pairs "
-                             "(aHash/dHash) union into the dedup "
-                             "component graph, so image-duplicate docs "
-                             "collapse under the same --survivor-policy "
-                             "as text near-dups")
-    p_full.add_argument("--image-backend", default="bmp",
-                        choices=["bmp", "png", "fake", "pil"],
-                        help="image decode backend for --image-blobs "
-                             "(bmp/png = real stdlib decodes; pil is gated in "
-                             "containers without imaging libs)")
-    p_full.add_argument("--audio-blobs", default=None,
-                        help="(doc_id, blob) parquet for corpora with an "
-                             "audio column (round 16): WAV energy-"
-                             "envelope near-dup pairs union into the "
-                             "dedup component graph, same contract as "
-                             "--image-blobs")
-    p_full.add_argument("--audio-benchmark", default=None,
-                        help="(doc_id, blob) WAV parquet of an eval "
-                             "benchmark's audio: docs whose audio is a "
-                             "near-dup of ANY benchmark clip are "
-                             "dropped before dedup (requires "
-                             "--audio-blobs; the audio twin of "
-                             "--image-benchmark)")
-    p_full.add_argument("--image-benchmark", default=None,
-                        help="(doc_id, blob) parquet of eval-benchmark "
-                             "IMAGES; corpus docs whose image is a "
-                             "perceptual near-dup of any benchmark image "
-                             "are dropped before dedup (the image twin "
-                             "of --benchmark). Requires --image-blobs")
-    p_full.add_argument("--video-blobs", default=None,
-                        help="(doc_id, blob) parquet for corpora with a "
-                             "video column (round 17): frame-sequence "
-                             "containers hash into temporal+content "
-                             "signatures whose near-dup pairs union "
-                             "into the dedup component graph, same "
-                             "contract as --image-blobs/--audio-blobs")
-    p_full.add_argument("--video-benchmark", default=None,
-                        help="(doc_id, blob) video parquet of an eval "
-                             "benchmark: docs whose video is a near-dup "
-                             "of ANY benchmark clip are dropped before "
-                             "dedup (requires --video-blobs)")
-    p_full.add_argument("--video-backend", default="container",
-                        choices=["container", "fake"],
-                        help="video decode backend for --video-blobs "
-                             "(container = the real frame-sequence "
-                             "decode over the stdlib BMP/PNG codecs)")
+    _add_modality_flags(p_full, "full")
 
     p_seed = sub.add_parser(
         "init-corpus", help="seed the maintained retained-corpus root"
@@ -406,33 +571,7 @@ def main(argv: list[str] | None = None) -> int:
     p_idx.add_argument("--batch-id", default="base",
                        help="write as an idempotent per-batch partition "
                             "(default 'base' keeps the root fold-safe)")
-    p_idx.add_argument("--image-blobs", default=None,
-                       help="with --perceptual: (doc_id, blob) parquet to "
-                            "hash into the perceptual index (one decode "
-                            "pass — the cost the daily loop never repays)")
-    p_idx.add_argument("--perceptual", default=None,
-                       help="perceptual-hash index path (2 BIGINTs/doc); "
-                            "requires --image-blobs")
-    p_idx.add_argument("--image-backend", default="bmp",
-                       choices=["bmp", "png", "fake", "pil"],
-                       help="see full --image-backend")
-    p_idx.add_argument("--audio-blobs", default=None,
-                       help="with --audio-index: (doc_id, blob) WAV "
-                            "parquet to hash into the audio index (one "
-                            "decode pass, like --perceptual)")
-    p_idx.add_argument("--audio-index", default=None,
-                       help="audio-hash index path (2 BIGINTs/doc); "
-                            "requires --audio-blobs")
-    p_idx.add_argument("--video-blobs", default=None,
-                       help="with --video-index: (doc_id, blob) video "
-                            "parquet to hash into the video index (one "
-                            "container-decode pass, like --perceptual)")
-    p_idx.add_argument("--video-index", default=None,
-                       help="video-hash index path (2 BIGINTs/doc); "
-                            "requires --video-blobs")
-    p_idx.add_argument("--video-backend", default="container",
-                       choices=["container", "fake"],
-                       help="see full --video-backend")
+    _add_modality_flags(p_idx, "build-index")
 
     p_inc = sub.add_parser("incremental", help="curate a daily batch")
     p_inc.add_argument("--new", required=True, help="new batch parquet")
@@ -473,54 +612,7 @@ def main(argv: list[str] | None = None) -> int:
                        help="see full --decon-n")
     p_inc.add_argument("--decon-bloom-min-grams", type=int, default=None,
                        help="see full --decon-bloom-min-grams")
-    p_inc.add_argument("--image-blobs", default=None,
-                       help="(doc_id, blob) parquet for the NEW batch's "
-                            "images; requires --perceptual-index. The "
-                            "batch is image-deduped against the retained "
-                            "corpus through the stored hash index — the "
-                            "corpus's images are never re-decoded")
-    p_inc.add_argument("--perceptual-index", default=None,
-                       help="perceptual-hash index root (from build-index "
-                            "--perceptual); with --fold-batch-id the "
-                            "surviving batch's hashes fold in after")
-    p_inc.add_argument("--image-benchmark", default=None,
-                       help="see full --image-benchmark; with "
-                            "--image-blobs alone (no --perceptual-index) "
-                            "the batch is image-DECONTAMINATED only")
-    p_inc.add_argument("--audio-blobs", default=None,
-                       help="(doc_id, blob) WAV parquet for the NEW "
-                            "batch's audio; requires --audio-index — "
-                            "the batch is audio-deduped against the "
-                            "retained corpus through the stored hash "
-                            "index, never a corpus re-decode")
-    p_inc.add_argument("--audio-index", default=None,
-                       help="audio-hash index root (from build-index "
-                            "--audio-index); with --fold-batch-id the "
-                            "surviving batch's hashes fold in after")
-    p_inc.add_argument("--audio-benchmark", default=None,
-                       help="see full --audio-benchmark; with "
-                            "--audio-blobs alone (no --audio-index) the "
-                            "batch is audio-DECONTAMINATED only")
-    p_inc.add_argument("--video-blobs", default=None,
-                       help="(doc_id, blob) video parquet for the NEW "
-                            "batch; requires --video-index — the batch "
-                            "is video-deduped against the retained "
-                            "corpus through the stored hash index, "
-                            "never a corpus re-decode")
-    p_inc.add_argument("--video-index", default=None,
-                       help="video-hash index root (from build-index "
-                            "--video-index); with --fold-batch-id the "
-                            "surviving batch's hashes fold in after")
-    p_inc.add_argument("--video-benchmark", default=None,
-                       help="see full --video-benchmark; with "
-                            "--video-blobs alone (no --video-index) the "
-                            "batch is video-DECONTAMINATED only")
-    p_inc.add_argument("--video-backend", default="container",
-                       choices=["container", "fake"],
-                       help="see full --video-backend")
-    p_inc.add_argument("--image-backend", default="bmp",
-                       choices=["bmp", "png", "fake", "pil"],
-                       help="see full --image-backend")
+    _add_modality_flags(p_inc, "incremental")
     p_inc.add_argument("--fold-batch-id", default=None,
                        help="after curating, fold the batch's SURVIVORS "
                             "into the signature index, key index, AND the "
@@ -571,42 +663,7 @@ def main(argv: list[str] | None = None) -> int:
                             "micro-batch's bins under the full run's "
                             "learned vocabulary (see incremental "
                             "--bpe-merges)")
-    p_str.add_argument("--image-blobs", default=None,
-                       help="(doc_id, blob) parquet covering the arrival "
-                            "docs' images; requires --perceptual-index. "
-                            "Each micro-batch is image-deduped against "
-                            "the retained hashes, and its survivors' "
-                            "hashes fold in — the stream form of "
-                            "incremental --image-blobs")
-    p_str.add_argument("--perceptual-index", default=None,
-                       help="perceptual-hash index root (seed with "
-                            "build-index --perceptual)")
-    p_str.add_argument("--image-benchmark", default=None,
-                       help="see full --image-benchmark")
-    p_str.add_argument("--image-backend", default="bmp",
-                       choices=["bmp", "png", "fake", "pil"],
-                       help="see full --image-backend")
-    p_str.add_argument("--audio-blobs", default=None,
-                       help="(doc_id, blob) WAV parquet covering the "
-                            "arrivals; requires --audio-index and/or "
-                            "--audio-benchmark (see incremental)")
-    p_str.add_argument("--audio-index", default=None,
-                       help="audio-hash index root; each micro-batch "
-                            "probes it and folds its survivors' hashes")
-    p_str.add_argument("--audio-benchmark", default=None,
-                       help="see full --audio-benchmark")
-    p_str.add_argument("--video-blobs", default=None,
-                       help="(doc_id, blob) video parquet covering the "
-                            "arrivals; requires --video-index and/or "
-                            "--video-benchmark (see incremental)")
-    p_str.add_argument("--video-index", default=None,
-                       help="video-hash index root; each micro-batch "
-                            "probes it and folds its survivors' hashes")
-    p_str.add_argument("--video-benchmark", default=None,
-                       help="see full --video-benchmark")
-    p_str.add_argument("--video-backend", default="container",
-                       choices=["container", "fake"],
-                       help="see full --video-backend")
+    _add_modality_flags(p_str, "stream")
     p_str.add_argument("--decon-n", type=int, default=5,
                        help="see full --decon-n")
     p_str.add_argument("--decon-bloom-min-grams", type=int, default=None,
@@ -783,70 +840,25 @@ def main(argv: list[str] | None = None) -> int:
             "--bpe-merges-out requires --bpe-fit "
             "(no merge table is fit without the fit stage)"
         )
-    if args.cmd == "build-index" and bool(
-        getattr(args, "image_blobs", None)
-    ) != bool(getattr(args, "perceptual", None)):
-        ap.error(
-            "build-index: --image-blobs and --perceptual go together"
+    for m in MODALITIES.values():
+        n, idx = m.name, _index_flag(m, args.cmd)
+        has_blobs, has_index, has_bench = (
+            getattr(args, f.replace("-", "_"), None)
+            for f in (f"{n}-blobs", idx, f"{n}-benchmark")
         )
-    if args.cmd == "build-index" and bool(
-        getattr(args, "audio_blobs", None)
-    ) != bool(getattr(args, "audio_index", None)):
-        ap.error(
-            "build-index: --audio-blobs and --audio-index go together"
-        )
-    if args.cmd == "build-index" and bool(
-        getattr(args, "video_blobs", None)
-    ) != bool(getattr(args, "video_index", None)):
-        ap.error(
-            "build-index: --video-blobs and --video-index go together"
-        )
-    if (
-        args.cmd in ("incremental", "stream")
-        and getattr(args, "video_blobs", None)
-        and not getattr(args, "video_index", None)
-        and not getattr(args, "video_benchmark", None)
-    ):
-        ap.error(
-            f"{args.cmd}: --video-blobs requires --video-index (the "
-            "retained corpus's video is reached only through the "
-            "stored hash index) and/or --video-benchmark (decon-only)"
-        )
-    if args.cmd == "full" and getattr(
-        args, "video_benchmark", None
-    ) and not getattr(args, "video_blobs", None):
-        ap.error("full: --video-benchmark requires --video-blobs")
-    if (
-        args.cmd in ("incremental", "stream")
-        and getattr(args, "audio_blobs", None)
-        and not getattr(args, "audio_index", None)
-        and not getattr(args, "audio_benchmark", None)
-    ):
-        ap.error(
-            f"{args.cmd}: --audio-blobs requires --audio-index (the "
-            "retained corpus's audio is reached only through the "
-            "stored hash index) and/or --audio-benchmark (decon-only)"
-        )
-    if args.cmd == "full" and getattr(
-        args, "audio_benchmark", None
-    ) and not getattr(args, "audio_blobs", None):
-        ap.error("full: --audio-benchmark requires --audio-blobs")
-    if (
-        args.cmd in ("incremental", "stream")
-        and getattr(args, "image_blobs", None)
-        and not getattr(args, "perceptual_index", None)
-        and not getattr(args, "image_benchmark", None)
-    ):
-        ap.error(
-            f"{args.cmd}: --image-blobs requires --perceptual-index "
-            "(the retained corpus's images are reached only through "
-            "the stored hash index) and/or --image-benchmark "
-            "(decon-only)"
-        )
-    if args.cmd == "full" and getattr(
-        args, "image_benchmark", None
-    ) and not getattr(args, "image_blobs", None):
-        ap.error("full: --image-benchmark requires --image-blobs")
+        if args.cmd == "build-index" and bool(has_blobs) != bool(has_index):
+            ap.error(f"build-index: --{n}-blobs and --{idx} go together")
+        if (
+            args.cmd in ("incremental", "stream")
+            and has_blobs and not has_index and not has_bench
+        ):
+            ap.error(
+                f"{args.cmd}: --{n}-blobs requires --{idx} (the retained "
+                f"corpus's {n} is reached only through the stored hash "
+                f"index) and/or --{n}-benchmark (decon-only)"
+            )
+        if args.cmd == "full" and has_bench and not has_blobs:
+            ap.error(f"full: --{n}-benchmark requires --{n}-blobs")
 
     spark = get_spark(app_name=f"curate_{args.cmd}")
     bench_docs = (
@@ -878,46 +890,19 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         frozen_quality = load_quality_model(args.quality_model)
-    langid_models = None
-    langid_fill_hist = None
+    langid = None  # frozen (models, fill_hist) of --langid-model
     if getattr(args, "langid_model", None):
         from data_pipeline_team5_spark.operators.langid import (
             load_langid_model,
         )
 
-        langid_models, _, langid_fill_hist = load_langid_model(
-            args.langid_model
-        )
-    image_blobs = (
-        spark.read.parquet(args.image_blobs)
-        if getattr(args, "image_blobs", None)
-        else None
-    )
-    image_bench = (
-        spark.read.parquet(args.image_benchmark)
-        if getattr(args, "image_benchmark", None)
-        else None
-    )
-    audio_blobs = (
-        spark.read.parquet(args.audio_blobs)
-        if getattr(args, "audio_blobs", None)
-        else None
-    )
-    audio_bench = (
-        spark.read.parquet(args.audio_benchmark)
-        if getattr(args, "audio_benchmark", None)
-        else None
-    )
-    video_blobs = (
-        spark.read.parquet(args.video_blobs)
-        if getattr(args, "video_blobs", None)
-        else None
-    )
-    video_bench = (
-        spark.read.parquet(args.video_benchmark)
-        if getattr(args, "video_benchmark", None)
-        else None
-    )
+        models, _, fill_hist = load_langid_model(args.langid_model)
+        langid = (models, fill_hist)
+    blobs, benches = {}, {}
+    for n in MODALITIES:
+        for into, flag in ((blobs, f"{n}_blobs"), (benches, f"{n}_benchmark")):
+            path = getattr(args, flag, None)
+            into[n] = spark.read.parquet(path) if path else None
     bpe_merges = None
     if getattr(args, "bpe_merges", None):
         # frozen merge table (round 17): the daily loop sizes bins
@@ -927,6 +912,20 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         bpe_merges, _ = load_bpe_merges(args.bpe_merges)
+    if args.cmd in ("incremental", "stream"):
+        inc_kw = dict(
+            token_budget=args.budget,
+            neardup_threshold=args.threshold,
+            index_sig_path=args.sig,
+            key_index_path=args.key,
+            benchmark_docs=bench_docs,
+            decon_bloom_min_grams=args.decon_bloom_min_grams,
+            bench_gram_count=bench_n_grams,
+            decon_n=args.decon_n,
+            quality_model=frozen_quality,
+            bpe_merges=bpe_merges,
+            **_modality_kwargs(args, blobs, benches),
+        )
     if args.cmd == "full":
         full_docs = spark.read.parquet(args.docs)
         if args.bpe_fit:
@@ -969,14 +968,6 @@ def main(argv: list[str] | None = None) -> int:
             quality_model_out=args.quality_model_out,
             langid_fill=args.langid_fill,
             langid_model_out=args.langid_model_out,
-            image_blobs=image_blobs,
-            benchmark_image_blobs=image_bench,
-            image_backend=args.image_backend,
-            audio_blobs=audio_blobs,
-            benchmark_audio_blobs=audio_bench,
-            video_blobs=video_blobs,
-            benchmark_video_blobs=video_bench,
-            video_backend=args.video_backend,
             bpe_merges=bpe_merges,
             scrub_pii=args.scrub_pii,
             survivor_policy=args.survivor_policy,
@@ -986,6 +977,7 @@ def main(argv: list[str] | None = None) -> int:
                 if args.source_priority
                 else None
             ),
+            **_modality_kwargs(args, blobs, benches),
         )
         out.write.mode("overwrite").parquet(args.out)
         n = spark.read.parquet(args.out).count()
@@ -1003,31 +995,18 @@ def main(argv: list[str] | None = None) -> int:
         docs = spark.read.parquet(args.docs)
         build_signature_index(docs, args.sig, batch_id=args.batch_id)
         build_exact_key_index(docs, args.key, batch_id=args.batch_id)
-        if image_blobs is not None:
-            build_perceptual_index(
-                image_blobs, args.perceptual,
-                backend=args.image_backend, batch_id=args.batch_id,
-            )
-        if audio_blobs is not None:
-            from data_pipeline_team5_spark.pipeline import (
-                build_audio_index,
-            )
-
-            build_audio_index(
-                audio_blobs, args.audio_index, batch_id=args.batch_id,
-            )
-        if video_blobs is not None:
-            from data_pipeline_team5_spark.pipeline import (
-                build_video_index,
-            )
-
-            build_video_index(
-                video_blobs, args.video_index,
-                backend=args.video_backend, batch_id=args.batch_id,
-            )
+        indexes = {}
+        for m in MODALITIES.values():
+            dest = _index_flag(m, args.cmd).replace("-", "_")
+            indexes[dest] = getattr(args, dest)
+            if blobs[m.name] is not None:
+                build_hash_index(
+                    blobs[m.name], indexes[dest], m.name,
+                    backend=getattr(args, f"{m.name}_backend", None),
+                    batch_id=args.batch_id,
+                )
         print(json.dumps({"status": "ok", "cmd": "build-index",
-                          "sig": args.sig, "key": args.key,
-                          "perceptual": getattr(args, "perceptual", None),
+                          "sig": args.sig, "key": args.key, **indexes,
                           "batch_id": args.batch_id}))
     elif args.cmd == "compact":
         report = compact_fold_stores(spark, args.roots, into=args.into)
@@ -1300,182 +1279,21 @@ def main(argv: list[str] | None = None) -> int:
             },
         }))
     elif args.cmd == "stream":
-        # The per-micro-batch body is exactly the `incremental
-        # --fold-batch-id` daily loop with fold = "s{batch_id}"; Structured
+        # Each micro-batch runs the `incremental --fold-batch-id` body
+        # (_curate_and_fold) with fold = "s{batch_id}"; Structured
         # Streaming's durable checkpoint replaces the cron — a rerun picks
         # up only unseen arrival files, and a batch that crashed mid-fold
         # replays under ITS OWN batch id, converging through the same
         # idempotent partition overwrites the daily loop relies on.
-        stream_roots = [(args.corpus, "corpus"), (args.sig, "sig"),
-                        (args.key, "key"), (args.out, "out")]
-        if getattr(args, "perceptual_index", None):
-            stream_roots.append(
-                (args.perceptual_index, "perceptual-index")
-            )
-        if getattr(args, "audio_index", None):
-            stream_roots.append((args.audio_index, "audio-index"))
-        if getattr(args, "video_index", None):
-            stream_roots.append((args.video_index, "video-index"))
-        for path, what in stream_roots:
-            _refuse_flat_root(path, what)
+        _refuse_flat_fold_roots(args)
         schema = spark.read.parquet(args.arrivals).schema
         processed: list[str] = []
 
         def process(batch_df, batch_id: int) -> None:
             fold = f"s{batch_id}"
-            langid_probe = None
-            if langid_models is not None:
-                from data_pipeline_team5_spark.operators.langid import (
-                    fill_missing_lang,
-                )
-
-                filled = fill_missing_lang(batch_df, langid_models)
-                # round 17 (VERDICT r16 #2): the fold's lang mixture vs
-                # the frozen model's fit-time snapshot — batch-sized
-                langid_probe = _langid_mixture_probe(
-                    filled, langid_fill_hist
-                )
-                batch_df = filled.drop("lang_source")
-            corpus = spark.read.parquet(args.corpus)
-            if "batch_id" in corpus.columns:
-                corpus = corpus.filter(F.col("batch_id") != fold)
-            out = curate_incremental_batch(
-                batch_df,
-                corpus,
-                token_budget=args.budget,
-                neardup_threshold=args.threshold,
-                index_sig_path=args.sig,
-                key_index_path=args.key,
-                exclude_batch_id=fold,
-                benchmark_docs=bench_docs,
-                decon_bloom_min_grams=args.decon_bloom_min_grams,
-                bench_gram_count=bench_n_grams,
-                decon_n=args.decon_n,
-                quality_model=frozen_quality,
-                new_image_blobs=image_blobs,
-                perceptual_index_path=getattr(
-                    args, "perceptual_index", None
-                ),
-                benchmark_image_blobs=image_bench,
-                image_backend=args.image_backend,
-                new_audio_blobs=audio_blobs,
-                audio_index_path=getattr(args, "audio_index", None),
-                benchmark_audio_blobs=audio_bench,
-                new_video_blobs=video_blobs,
-                video_index_path=getattr(args, "video_index", None),
-                benchmark_video_blobs=video_bench,
-                video_backend=args.video_backend,
-                bpe_merges=bpe_merges,
+            manifest = _curate_and_fold(
+                spark, args, batch_df, fold, inc_kw, langid
             )
-            off = next_bin_offset(spark, args.out, exclude_batch_id=fold)
-            written = (
-                out.withColumn("bin_id", F.col("bin_id") + F.lit(off))
-                .withColumn("batch_id", F.lit(fold))
-            )
-            (
-                written.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(args.out)
-            )
-            kept = _read_fold_kept(
-                spark, args.out, fold, written.schema
-            )
-            survivors = batch_df.join(kept.select("doc_id"), "doc_id")
-            build_signature_index(survivors, args.sig, batch_id=fold)
-            build_exact_key_index(survivors, args.key, batch_id=fold)
-            if image_blobs is not None and getattr(
-                args, "perceptual_index", None
-            ):
-                build_perceptual_index(
-                    image_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.perceptual_index,
-                    backend=args.image_backend,
-                    batch_id=fold,
-                )
-            if audio_blobs is not None and getattr(
-                args, "audio_index", None
-            ):
-                from data_pipeline_team5_spark.pipeline import (
-                    build_audio_index,
-                )
-
-                build_audio_index(
-                    audio_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.audio_index,
-                    batch_id=fold,
-                )
-            if video_blobs is not None and getattr(
-                args, "video_index", None
-            ):
-                from data_pipeline_team5_spark.pipeline import (
-                    build_video_index,
-                )
-
-                build_video_index(
-                    video_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.video_index,
-                    backend=args.video_backend,
-                    batch_id=fold,
-                )
-            append_corpus_batch(survivors, args.corpus, fold)
-            if args.shard_root:
-                from data_pipeline_team5_spark.sources.writers import (
-                    write_training_shards,
-                )
-
-                write_training_shards(
-                    survivors, args.shard_root, batch_id=fold
-                )
-            # round 16 (VERDICT r15 #7): the stream loop applies the
-            # frozen model but a console warning dies with the worker —
-            # per-micro-batch drift goes into the SAME durable fold
-            # manifest as the daily loop's, so a drifting week is
-            # visible in the artifact trail.
-            manifest = {"fold": fold, "kept": kept.count()}
-            if langid_probe is not None:
-                import sys as _sys
-
-                from data_pipeline_team5_spark.operators.langid import (
-                    LANGID_DRIFT_WARN_TV,
-                )
-
-                mixture, li_tv, li_hot = langid_probe
-                manifest["langid_mixture"] = mixture
-                manifest["langid_drift_tv"] = li_tv
-                manifest["langid_drift_hot"] = li_hot
-                if li_hot:
-                    print(
-                        "WARNING: frozen langid model looks stale for "
-                        f"micro-batch {fold} — predicted-lang mixture "
-                        f"TV {li_tv:.3f} exceeds {LANGID_DRIFT_WARN_TV}"
-                        " vs the full run's fill snapshot",
-                        file=_sys.stderr,
-                    )
-            if frozen_quality is not None and frozen_quality.get(
-                "score_hist"
-            ):
-                import sys as _sys
-
-                from data_pipeline_team5_spark.operators.quality import (
-                    QUALITY_DRIFT_WARN_TV,
-                )
-
-                drift, hot = _quality_drift_probe(
-                    batch_df, frozen_quality, bench_docs,
-                    args.decon_bloom_min_grams, bench_n_grams,
-                    args.decon_n,
-                )
-                manifest["quality_drift_tv"] = drift
-                manifest["quality_drift_hot"] = sorted(hot)
-                if hot:
-                    print(
-                        "WARNING: frozen quality model looks stale for "
-                        f"micro-batch {fold} — score-distribution TV "
-                        f"{hot} exceeds {QUALITY_DRIFT_WARN_TV} vs the "
-                        "full run's snapshot",
-                        file=_sys.stderr,
-                    )
             _write_fold_manifest(args.out, fold, manifest)
             processed.append(fold)
 
@@ -1501,216 +1319,54 @@ def main(argv: list[str] | None = None) -> int:
     else:
         fold = args.fold_batch_id
         if fold is not None:
-            roots = [(args.corpus, "corpus"), (args.sig, "sig"),
-                     (args.key, "key"), (args.out, "out")]
-            if getattr(args, "perceptual_index", None):
-                roots.append((args.perceptual_index, "perceptual-index"))
-            if getattr(args, "audio_index", None):
-                roots.append((args.audio_index, "audio-index"))
-            if getattr(args, "video_index", None):
-                roots.append((args.video_index, "video-index"))
-            for path, what in roots:
-                _refuse_flat_root(path, what)
+            _refuse_flat_fold_roots(args)
         new = spark.read.parquet(args.new)
-        langid_probe = None
-        if langid_models is not None:
-            # frozen langid fill (round 16): NULL langs filled under the
-            # FULL run's models before the allowlist — never a refit on
-            # one day's labeled slice
-            from data_pipeline_team5_spark.operators.langid import (
-                fill_missing_lang,
-            )
-
-            filled = fill_missing_lang(new, langid_models)
-            if fold is not None:
-                # round 17 (VERDICT r16 #2): the fold's lang mixture vs
-                # the frozen model's fit-time snapshot, for the manifest
-                langid_probe = _langid_mixture_probe(
-                    filled, langid_fill_hist
-                )
-            new = filled.drop("lang_source")
-        corpus = spark.read.parquet(args.corpus)
-        if fold is not None and "batch_id" in corpus.columns:
-            # replay safety: a crashed day D re-run must not see its own
-            # previously folded survivors in the corpus or the indexes
-            corpus = corpus.filter(F.col("batch_id") != fold)
-        out = curate_incremental_batch(
-            new,
-            corpus,
-            token_budget=args.budget,
-            neardup_threshold=args.threshold,
-            index_sig_path=args.sig,
-            key_index_path=args.key,
-            exclude_batch_id=fold,
-            benchmark_docs=bench_docs,
-            decon_bloom_min_grams=args.decon_bloom_min_grams,
-            bench_gram_count=bench_n_grams,
-            decon_n=args.decon_n,
-            quality_model=frozen_quality,
-            new_image_blobs=image_blobs,
-            perceptual_index_path=getattr(args, "perceptual_index", None),
-            benchmark_image_blobs=image_bench,
-            image_backend=args.image_backend,
-            new_audio_blobs=audio_blobs,
-            audio_index_path=getattr(args, "audio_index", None),
-            benchmark_audio_blobs=audio_bench,
-            new_video_blobs=video_blobs,
-            video_index_path=getattr(args, "video_index", None),
-            benchmark_video_blobs=video_bench,
-            video_backend=getattr(args, "video_backend", "container"),
-            bpe_merges=bpe_merges,
-        )
+        summary = {"status": "ok", "cmd": "incremental", "out": args.out,
+                   "folded": fold}
         if fold is None:
+            if langid is not None:
+                from data_pipeline_team5_spark.operators.langid import (
+                    fill_missing_lang,
+                )
+
+                new = fill_missing_lang(new, langid[0]).drop("lang_source")
+            out = curate_incremental_batch(
+                new, spark.read.parquet(args.corpus), **inc_kw
+            )
             out.write.mode("overwrite").parquet(args.out)
-            kept = spark.read.parquet(args.out)
-            n = kept.count()
-        else:
-            # batch-local bins → globally-unique bins: offset past every
-            # OTHER batch's max (excluding this batch id keeps a replay
-            # bitwise-idempotent with the partition overwrite)
-            off = next_bin_offset(spark, args.out, exclude_batch_id=fold)
-            written = (
-                out.withColumn("bin_id", F.col("bin_id") + F.lit(off))
-                .withColumn("batch_id", F.lit(fold))
-            )
-            (
-                written.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(args.out)
-            )
-            kept = _read_fold_kept(
-                spark, args.out, fold, written.schema
-            )
-            n = kept.count()
-            survivors = new.join(kept.select("doc_id"), "doc_id")
-            build_signature_index(survivors, args.sig, batch_id=fold)
-            build_exact_key_index(survivors, args.key, batch_id=fold)
-            if image_blobs is not None and getattr(
-                args, "perceptual_index", None
-            ):
-                # image twin of the signature fold: tomorrow's batch
-                # probes today's survivors' hashes, never their pixels
-                build_perceptual_index(
-                    image_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.perceptual_index,
-                    backend=args.image_backend,
-                    batch_id=fold,
-                )
-            if audio_blobs is not None and getattr(
-                args, "audio_index", None
-            ):
-                # audio twin (round 16): the survivors' audio hashes
-                # fold in — tomorrow probes hashes, never samples
-                from data_pipeline_team5_spark.pipeline import (
-                    build_audio_index,
-                )
-
-                build_audio_index(
-                    audio_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.audio_index,
-                    batch_id=fold,
-                )
-            if video_blobs is not None and getattr(
-                args, "video_index", None
-            ):
-                # video twin (round 17): the survivors' video hashes
-                # fold in — tomorrow probes hashes, never frames
-                from data_pipeline_team5_spark.pipeline import (
-                    build_video_index,
-                )
-
-                build_video_index(
-                    video_blobs.join(kept.select("doc_id"), "doc_id"),
-                    args.video_index,
-                    backend=getattr(args, "video_backend", "container"),
-                    batch_id=fold,
-                )
-            # the corpus grows too — see module docstring (ADVICE r6 #1)
-            append_corpus_batch(survivors, args.corpus, fold)
-        summary = {"status": "ok", "cmd": "incremental", "kept": n,
-                   "out": args.out, "folded": fold}
-        if frozen_quality is not None and frozen_quality.get("score_hist"):
-            # frozen-model drift guard (round 15, VERDICT r14 #4): TV
-            # distance of the batch's score distribution vs the full
-            # run's stored snapshot — a stale/mismatched model is
-            # FLAGGED, never silently applied. Batch-sized work, via
-            # the probe the stream loop shares.
-            import sys as _sys
-
-            from data_pipeline_team5_spark.operators.quality import (
-                QUALITY_DRIFT_WARN_TV,
-            )
-
-            drift, hot = _quality_drift_probe(
-                new, frozen_quality, bench_docs,
-                args.decon_bloom_min_grams, bench_n_grams, args.decon_n,
-            )
-            summary["quality_drift_tv"] = drift
-            if hot:
-                print(
-                    "WARNING: frozen quality model looks stale for this "
-                    f"batch — score-distribution TV {hot} exceeds "
-                    f"{QUALITY_DRIFT_WARN_TV} vs the full run's snapshot"
-                    " (refit via `full --quality-model-out`, or confirm "
-                    "the batch really is from a shifted source)",
-                    file=_sys.stderr,
-                )
-        if getattr(args, "report_drift", False):
-            if fold is None:
+            summary["kept"] = spark.read.parquet(args.out).count()
+            drift = _quality_drift_probe(new, inc_kw, "this batch")
+            if drift is not None:
+                summary["quality_drift_tv"] = drift[0]
+            if args.report_drift:
                 raise ValueError(
                     "--report-drift requires --fold-batch-id (drift is "
                     "defined against the maintained corpus root)"
                 )
-            from data_pipeline_team5_spark.plans.versioning_family import (
-                drift_report,
+        else:
+            manifest = _curate_and_fold(
+                spark, args, new, fold, inc_kw, langid
             )
-
-            grown = spark.read.parquet(args.corpus)
-            pre = grown.filter(F.col("batch_id") != fold)
-            summary["drift_tv"] = {
-                r["feature"]: r["tv"]
-                for r in drift_report(
-                    pre.select("lang", "n_chars"),
-                    grown.select("lang", "n_chars"),
-                ).collect()
-            }
-        if fold is not None:
-            # round 16 (VERDICT r15 #7): persist the fold's drift
-            # evidence next to its assignments — manifest, not console
-            manifest = {"fold": fold, "kept": summary["kept"]}
-            if "quality_drift_tv" in summary:
-                manifest["quality_drift_tv"] = summary[
-                    "quality_drift_tv"
-                ]
-                manifest["quality_drift_hot"] = sorted(hot)
-            if "drift_tv" in summary:
-                manifest["corpus_drift_tv"] = summary["drift_tv"]
-            if langid_probe is not None:
-                # round 17 (VERDICT r16 #2): the langid mixture row —
-                # manifest symmetry with the quality drift guard
-                import sys as _sys
-
-                from data_pipeline_team5_spark.operators.langid import (
-                    LANGID_DRIFT_WARN_TV,
+            summary["kept"] = manifest["kept"]
+            for k in ("quality_drift_tv", "langid_drift_tv"):
+                if k in manifest:
+                    summary[k] = manifest[k]
+            if args.report_drift:
+                from data_pipeline_team5_spark.plans.versioning_family import (
+                    drift_report,
                 )
 
-                mixture, li_tv, li_hot = langid_probe
-                manifest["langid_mixture"] = mixture
-                manifest["langid_drift_tv"] = li_tv
-                manifest["langid_drift_hot"] = li_hot
-                summary["langid_drift_tv"] = li_tv
-                if li_hot:
-                    print(
-                        "WARNING: frozen langid model looks stale for "
-                        f"this batch — predicted-lang mixture TV "
-                        f"{li_tv:.3f} exceeds {LANGID_DRIFT_WARN_TV} "
-                        "vs the full run's fill snapshot (refit via "
-                        "`full --langid-fill --langid-model-out`, or "
-                        "confirm the batch really is from a shifted "
-                        "source)",
-                        file=_sys.stderr,
-                    )
+                grown = spark.read.parquet(args.corpus)
+                pre = grown.filter(F.col("batch_id") != fold)
+                summary["drift_tv"] = manifest["corpus_drift_tv"] = {
+                    r["feature"]: r["tv"]
+                    for r in drift_report(
+                        pre.select("lang", "n_chars"),
+                        grown.select("lang", "n_chars"),
+                    ).collect()
+                }
+            # round 16 (VERDICT r15 #7): persist the fold's drift
+            # evidence next to its assignments — manifest, not console
             _write_fold_manifest(args.out, fold, manifest)
         print(json.dumps(summary))
     return 0

@@ -29,7 +29,8 @@ Scale notes:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -906,7 +907,7 @@ def perceptual_pairs_against_index(
     — the incremental probe (round 15, VERDICT r14 #7): the retained
     corpus's images are never re-decoded or re-hashed; its stored
     (doc_id, dhash, ahash) rows (2 longs/doc — see
-    pipeline.py:build_perceptual_index) are re-keyed map-side and the
+    pipeline.py:build_hash_index) are re-keyed map-side and the
     batch's keys probe them. Bitwise equal to
     ``perceptual_pairs(new ∪ index)`` filtered to pairs touching the
     batch (pinned in tests/test_multimodal.py); the ``max_bucket`` cap
@@ -1398,3 +1399,30 @@ def attach_wav_blob(
     return df.select("doc_id", text_col).mapInPandas(
         batches, "doc_id BIGINT, blob BINARY"
     )
+
+
+# ---------------------------------------------------------------------------
+# The modality table: every perceptual leg of the curation pipeline —
+# decontamination, near-dup pairs, stored-index probes and builds, and the
+# curate CLI's per-modality flags — is written once and looped over this
+# table, in its order (image, then audio, then video). All three hash into
+# the same (doc_id, dhash, ahash) shape, so only the hash function and the
+# default decode backend differ.
+
+
+class Modality(NamedTuple):
+    name: str  # the ``{name}_blobs`` / ``--{name}-blobs`` spelling
+    index: str  # stored index: ``{index}_index_path``, ``--{index}-index``
+    hashes: Callable[..., DataFrame]  # (blobs, backend=) -> hash table
+    backend: str  # default decode backend
+
+
+MODALITIES: dict[str, Modality] = {
+    m.name: m
+    for m in (
+        Modality("image", "perceptual", perceptual_hashes, "bmp"),
+        Modality("audio", "audio", audio_hashes, "wav"),
+        Modality("video", "video", video_hashes, "container"),
+    )
+}
+MODALITY_MAX_HAMMING = 6  # dHash Hamming bound every curation leg uses

@@ -24,7 +24,13 @@ from pyspark.sql import functions as F
 
 from data_pipeline_team5_spark.functions.scalars import dsum
 from data_pipeline_team5_spark.operators.multimodal import (
+    MODALITIES,
+    MODALITY_MAX_HAMMING,
     PERCEPTUAL_MAX_BUCKET,
+    Modality,
+    contaminated_image_ids,
+    perceptual_pairs,
+    perceptual_pairs_against_index,
 )
 from data_pipeline_team5_spark.operators.pivoting import pivot_max_cells
 from data_pipeline_team5_spark.sources.ingest import ingest_box_office_json
@@ -382,6 +388,74 @@ def _curation_filter_stage(
     return kept
 
 
+def _modality_legs(
+    blobs: tuple, benches: tuple, backends: tuple,
+    index_paths: tuple = (None, None, None),
+) -> list[tuple]:
+    """The active perceptual legs of one curation call, in
+    ``MODALITIES`` order: ``(modality, blobs, benchmark blobs, backend,
+    index path)`` for every modality given blobs or benchmark blobs.
+    Each argument holds one entry per modality, in table order; a
+    ``None`` backend is the table's default."""
+    return [
+        (m, b, bb, be or m.backend, ix)
+        for m, b, bb, be, ix in zip(
+            MODALITIES.values(), blobs, benches, backends, index_paths
+        )
+        if b is not None or bb is not None
+    ]
+
+
+def _perceptual_decon(
+    kept: DataFrame, legs: list[tuple], caller: str, prefix: str
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """Stage 1a of both curation presets, one leg at a time in table
+    order: drop docs whose payload is a perceptual near-dup of ANY
+    eval-benchmark payload — the modality twin of the 5-gram rule, at
+    the same early stage (eval overlap must never reach training bins).
+    The hash-table machinery is modality-blind, so
+    contaminated_image_ids runs on audio and video hashes verbatim.
+
+    The kept pool's payloads decode ONCE into a pinned 2-longs/doc hash
+    table per leg; they are returned by modality name so the dedup
+    stage reuses them (:func:`_pool_hashes`). ``prefix`` spells the
+    caller's blobs parameter (``{prefix}{name}_blobs``) in the error."""
+    pinned: dict[str, DataFrame] = {}
+    for m, blobs, bench, backend, _ in legs:
+        if bench is None:
+            continue
+        if blobs is None:
+            raise ValueError(
+                f"{caller}: benchmark_{m.name}_blobs requires "
+                f"{prefix}{m.name}_blobs"
+            )
+        h = m.hashes(
+            blobs.join(kept.select("doc_id"), "doc_id"), backend=backend
+        ).localCheckpoint()
+        bh = m.hashes(bench, backend=backend).localCheckpoint()
+        bad = contaminated_image_ids(
+            h, bh, max_hamming=MODALITY_MAX_HAMMING
+        ).select("doc_id")
+        kept = kept.join(bad, "doc_id", "left_anti")
+        pinned[m.name] = h
+    return kept, pinned
+
+
+def _pool_hashes(
+    m: Modality, blobs: DataFrame, backend: str,
+    pinned: dict[str, DataFrame], uniq: DataFrame,
+) -> DataFrame:
+    """One leg's hash table over the curated+deduped pool ``uniq``:
+    the decon stage's pinned table subset by id when it ran, else one
+    decode restricted to the pool, pinned (2 longs/doc) so the banded
+    join's two branches never re-run the Arrow decode."""
+    if m.name in pinned:
+        return pinned[m.name].join(uniq.select("doc_id"), "doc_id")
+    return m.hashes(
+        blobs.join(uniq.select("doc_id"), "doc_id"), backend=backend
+    ).localCheckpoint()
+
+
 def curate_training_data(
     docs: DataFrame,
     token_budget: int = 2048,
@@ -406,20 +480,13 @@ def curate_training_data(
     image_blobs: DataFrame | None = None,
     benchmark_image_blobs: DataFrame | None = None,
     image_backend: str = "bmp",
-    image_max_hamming: int = 6,
-    image_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     langid_fill: bool = False,
     langid_model_out: str | None = None,
     audio_blobs: DataFrame | None = None,
     benchmark_audio_blobs: DataFrame | None = None,
-    audio_backend: str = "wav",
-    audio_max_hamming: int = 6,
-    audio_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     video_blobs: DataFrame | None = None,
     benchmark_video_blobs: DataFrame | None = None,
     video_backend: str = "container",
-    video_max_hamming: int = 6,
-    video_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     bpe_merges: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """The end-to-end training-data curation a 100 TB corpus run ships,
@@ -490,15 +557,21 @@ def curate_training_data(
     driver-local temp dir is used (local mode only). Intermediate edge
     lists are deleted after the labels write either way.
 
-    ``image_blobs`` (round 15, VERDICT r14 #1): optional (doc_id, blob)
-    frame for corpora with an image column. Perceptual near-dup pairs
-    (aHash/dHash, operators/multimodal.py) union into the text pair
-    graph before the component step, so image-duplicate docs collapse
-    under the same survivor policy as text near-dups. ``image_backend``
-    picks the decode ("bmp" stdlib / "fake" / gated "pil");
-    ``image_max_bucket`` defaults to the production degenerate-bucket
-    cap (the round-14 measured quadratic-pair-list trade — correct
-    here, where clusters, not pair lists, are consumed).
+    ``image_blobs`` / ``audio_blobs`` / ``video_blobs`` (rounds 15-17):
+    optional (doc_id, blob) frames for corpora with a media column, one
+    leg per entry of the modality table
+    (operators/multimodal.py:MODALITIES, run in table order).
+    Perceptual near-dup pairs (dHash Hamming ≤ MODALITY_MAX_HAMMING)
+    union into the text pair graph before the component step, so
+    media-duplicate docs collapse under the same survivor policy as
+    text near-dups; the banded join is capped at PERCEPTUAL_MAX_BUCKET
+    (the round-14 measured quadratic-pair-list trade — correct here,
+    where clusters, not pair lists, are consumed).
+    ``benchmark_{image,audio,video}_blobs`` drop docs whose payload
+    near-dups an eval-benchmark payload (stage 1a) and require the
+    matching blobs. ``image_backend`` / ``video_backend`` pick the
+    decode ("bmp" stdlib / "fake" / gated "pil"; "container" /
+    "fake"); audio always decodes the table's "wav".
     """
     from data_pipeline_team5_spark.operators.components import (
         connected_components,
@@ -564,95 +637,16 @@ def curate_training_data(
         decon_n=decon_n,
     )
 
-    # 1a-image. optional IMAGE-grain decontamination (round 15): drop
-    # docs whose image is a perceptual near-dup of ANY eval-benchmark
-    # image — the image twin of the 5-gram rule above, at the same
-    # early stage (eval overlap must never reach training bins). The
-    # kept pool's images decode ONCE here into a pinned 2-longs/doc
-    # hash table that the dedup stage (3b) reuses by id semi-join, so
-    # turning decon on never adds a second decode pass.
-    ih_kept: DataFrame | None = None
-    if benchmark_image_blobs is not None:
-        if image_blobs is None:
-            raise ValueError(
-                "curate_training_data: benchmark_image_blobs requires "
-                "image_blobs (the corpus side's images)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            contaminated_image_ids,
-            perceptual_hashes,
-        )
-
-        ih_kept = perceptual_hashes(
-            image_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=image_backend,
-        ).localCheckpoint()
-        bh = perceptual_hashes(
-            benchmark_image_blobs, backend=image_backend
-        ).localCheckpoint()
-        bad = contaminated_image_ids(
-            ih_kept, bh, max_hamming=image_max_hamming
-        ).select("doc_id")
-        kept = kept.join(bad, "doc_id", "left_anti")
-
-    # 1a-audio (round 16): audio-grain decontamination — the audio twin
-    # of the image rule above, at the same early stage (eval audio must
-    # never reach training bins). The hash-table machinery is modality-
-    # blind, so contaminated_image_ids runs on audio hashes verbatim;
-    # the kept pool's one decode pass is pinned and reused by the
-    # audio-dedup stage (3c) below.
-    ah_kept: DataFrame | None = None
-    if benchmark_audio_blobs is not None:
-        if audio_blobs is None:
-            raise ValueError(
-                "curate_training_data: benchmark_audio_blobs requires "
-                "audio_blobs (the corpus side's audio)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            audio_hashes,
-            contaminated_image_ids,
-        )
-
-        ah_kept = audio_hashes(
-            audio_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=audio_backend,
-        ).localCheckpoint()
-        abh = audio_hashes(
-            benchmark_audio_blobs, backend=audio_backend
-        ).localCheckpoint()
-        abad = contaminated_image_ids(
-            ah_kept, abh, max_hamming=audio_max_hamming
-        ).select("doc_id")
-        kept = kept.join(abad, "doc_id", "left_anti")
-
-    # 1a-video (round 17, VERDICT r16 #1): video-grain decontamination
-    # — same contract, third modality: the hash-table machinery is
-    # modality-blind, so contaminated_image_ids runs on video hashes
-    # verbatim; the kept pool's one container decode pass is pinned and
-    # reused by the video-dedup stage (3d) below.
-    vh_kept: DataFrame | None = None
-    if benchmark_video_blobs is not None:
-        if video_blobs is None:
-            raise ValueError(
-                "curate_training_data: benchmark_video_blobs requires "
-                "video_blobs (the corpus side's video)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            contaminated_image_ids,
-            video_hashes,
-        )
-
-        vh_kept = video_hashes(
-            video_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=video_backend,
-        ).localCheckpoint()
-        vbh = video_hashes(
-            benchmark_video_blobs, backend=video_backend
-        ).localCheckpoint()
-        vbad = contaminated_image_ids(
-            vh_kept, vbh, max_hamming=video_max_hamming
-        ).select("doc_id")
-        kept = kept.join(vbad, "doc_id", "left_anti")
+    # 1a. optional modality-grain decontamination (rounds 15-17): see
+    # _perceptual_decon; the pinned hash tables are reused by the
+    # dedup stage (3b), so turning decon on never adds a decode pass.
+    legs = _modality_legs(
+        (image_blobs, audio_blobs, video_blobs),
+        (benchmark_image_blobs, benchmark_audio_blobs,
+         benchmark_video_blobs),
+        (image_backend, None, video_backend),
+    )
+    kept, pinned = _perceptual_decon(kept, legs, "curate_training_data", "")
 
     # 1b. optional MODEL-BASED quality filters (round 14, operators/
     # quality.py — the CCNet two-signal stack), applied to the filtered
@@ -839,97 +833,24 @@ def curate_training_data(
         method=neardup_method,
         n_docs=n_docs,
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # 3b. optional IMAGE near-dup pairs (round 15, VERDICT r14 #1): docs
-    # whose image payloads are perceptual near-dups (dHash Hamming ≤
-    # image_max_hamming via the capped banded join) union into the SAME
-    # component graph, so one doc carrying a re-encoded copy of
-    # another's image collapses into its component and the chosen
-    # survivor_policy — min_id/quality/source_rank — applies to the
-    # image modality unchanged. Hashing is restricted to the curated+
-    # exact-deduped pool (docs already dropped never decode), and the
-    # hash table is pinned (2 longs/doc) so the banded self-join's two
-    # branches never re-run the Arrow decode.
-    if image_blobs is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            perceptual_hashes,
-            perceptual_pairs,
-        )
-
-        if ih_kept is not None:
-            # reuse the decon stage's decode pass: subset the pinned
-            # 2-longs/doc table to the curated+deduped pool by id
-            ih = ih_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            ih = perceptual_hashes(
-                image_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=image_backend,
-            ).localCheckpoint()
-        ipairs = perceptual_pairs(
-            ih,
-            max_hamming=image_max_hamming,
-            max_bucket=image_max_bucket,
+    # 3b. optional modality near-dup pairs (rounds 15-17, table order):
+    # docs whose payloads are perceptual near-dups (dHash Hamming ≤
+    # MODALITY_MAX_HAMMING via the capped banded join) union into the
+    # SAME component graph, so one doc carrying a re-encoded copy of
+    # another's image, clip or video collapses into its component and
+    # the chosen survivor_policy applies to every modality unchanged.
+    # Hashing is restricted to the curated+exact-deduped pool.
+    for m, blobs, _, backend, _ in legs:
+        if blobs is None:
+            continue
+        mpairs = perceptual_pairs(
+            _pool_hashes(m, blobs, backend, pinned, uniq),
+            max_hamming=MODALITY_MAX_HAMMING,
+            max_bucket=PERCEPTUAL_MAX_BUCKET,
         ).select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         )
-        pairs = pairs.unionByName(ipairs)
-
-    # 3c-audio (round 16, VERDICT r15 #5's pipeline leg): same contract
-    # as 3b-image for the AUDIO modality — WAV payloads hash into the
-    # identical (doc_id, dhash, ahash) shape, so the banded pairs union
-    # into the same component graph and every survivor policy applies
-    # to audio near-dups unchanged. Hashing restricted to the curated+
-    # exact-deduped pool; hash table pinned (2 longs/doc, one decode).
-    if audio_blobs is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            audio_hashes,
-            perceptual_pairs,
-        )
-
-        if ah_kept is not None:
-            # reuse the decon stage's decode pass (the ih_kept idiom)
-            ah = ah_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            ah = audio_hashes(
-                audio_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=audio_backend,
-            ).localCheckpoint()
-        apairs = perceptual_pairs(
-            ah,
-            max_hamming=audio_max_hamming,
-            max_bucket=audio_max_bucket,
-        ).select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        pairs = pairs.unionByName(apairs)
-
-    # 3d-video (round 17, VERDICT r16 #1's pipeline leg): the third
-    # modality on the same component graph — container payloads hash
-    # into the identical (doc_id, dhash, ahash) shape, banded pairs
-    # union in, every survivor policy applies to video near-dups
-    # unchanged. Hashing restricted to the curated+exact-deduped pool;
-    # hash table pinned (2 longs/doc, one decode pass).
-    if video_blobs is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            perceptual_pairs,
-            video_hashes,
-        )
-
-        if vh_kept is not None:
-            # reuse the decon stage's decode pass (the ih_kept idiom)
-            vh = vh_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            vh = video_hashes(
-                video_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=video_backend,
-            ).localCheckpoint()
-        vpairs = perceptual_pairs(
-            vh,
-            max_hamming=video_max_hamming,
-            max_bucket=video_max_bucket,
-        ).select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        pairs = pairs.unionByName(vpairs)
+        pairs = pairs.unionByName(mpairs)
     comp = connected_components(
         uniq.select("doc_id"), pairs, id_col="doc_id",
         scratch_dir=scratch_dir,
@@ -1076,20 +997,13 @@ def curate_incremental_batch(
     perceptual_index_path: str | None = None,
     benchmark_image_blobs: DataFrame | None = None,
     image_backend: str = "bmp",
-    image_max_hamming: int = 6,
-    image_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     new_audio_blobs: DataFrame | None = None,
     audio_index_path: str | None = None,
     benchmark_audio_blobs: DataFrame | None = None,
-    audio_backend: str = "wav",
-    audio_max_hamming: int = 6,
-    audio_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     new_video_blobs: DataFrame | None = None,
     video_index_path: str | None = None,
     benchmark_video_blobs: DataFrame | None = None,
     video_backend: str = "container",
-    video_max_hamming: int = 6,
-    video_max_bucket: int | None = PERCEPTUAL_MAX_BUCKET,
     bpe_merges: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Daily curation update: run the full curation contract for a NEW
@@ -1146,19 +1060,22 @@ def curate_incremental_batch(
     ``scratch_dir``: forwarded to the component step (see
     :func:`curate_training_data` — same conf fallback and cleanup).
 
-    ``new_image_blobs`` + ``perceptual_index_path`` (round 15, VERDICT
-    r14 #1/#7): image dedup for the daily loop. The batch's blobs are
-    decoded and hashed ONCE (restricted to docs that survived the text
-    stages so far); the retained corpus's images are touched only
-    through the stored 2-longs/doc hash index
-    (:func:`build_perceptual_index` — the corpus is never re-decoded).
-    Pairs touching the batch union into the same component graph, so
-    the component-level drop rule (any retained member ⇒ the new doc
-    drops) covers the image modality too. Requires the index when
-    image blobs are given — a recompute fallback would need the
-    CORPUS's blobs, which this path deliberately never reads.
-    ``exclude_batch_id`` prunes the index for replays like the other
-    two indexes.
+    ``new_{image,audio,video}_blobs`` + ``perceptual_index_path`` /
+    ``audio_index_path`` / ``video_index_path`` (rounds 15-17): media
+    dedup for the daily loop, one leg per entry of the modality table
+    (operators/multimodal.py:MODALITIES, run in table order). The
+    batch's blobs are decoded and hashed ONCE (restricted to docs that
+    survived the text stages so far); the retained corpus's payloads
+    are touched only through the stored 2-longs/doc hash index
+    (:func:`build_hash_index` — the corpus is never re-decoded). Pairs
+    touching the batch union into the same component graph, so the
+    component-level drop rule (any retained member ⇒ the new doc
+    drops) covers every modality. A leg's blobs require its index —
+    a recompute fallback would need the CORPUS's blobs, which this path
+    deliberately never reads — unless ``benchmark_{name}_blobs`` is
+    given, which decontaminates the batch as in
+    :func:`curate_training_data`. ``exclude_batch_id`` prunes the
+    indexes for replays like the other two indexes.
     """
     from data_pipeline_team5_spark.operators.components import (
         connected_components,
@@ -1199,85 +1116,20 @@ def curate_incremental_batch(
 
         kept = apply_frozen_quality_model(kept, quality_model)
 
-    # 1a-image. optional IMAGE-grain decontamination (round 15): the
-    # batch's kept pool decodes ONCE into a pinned hash table; the
-    # benchmark side is reference-sized. The table is reused by the
-    # image-dedup probe below (id semi-join), same as the full run.
-    nh_kept: DataFrame | None = None
-    if benchmark_image_blobs is not None:
-        if new_image_blobs is None:
-            raise ValueError(
-                "curate_incremental_batch: benchmark_image_blobs "
-                "requires new_image_blobs (the batch's images)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            contaminated_image_ids,
-            perceptual_hashes,
-        )
-
-        nh_kept = perceptual_hashes(
-            new_image_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=image_backend,
-        ).localCheckpoint()
-        bh = perceptual_hashes(
-            benchmark_image_blobs, backend=image_backend
-        ).localCheckpoint()
-        bad = contaminated_image_ids(
-            nh_kept, bh, max_hamming=image_max_hamming
-        ).select("doc_id")
-        kept = kept.join(bad, "doc_id", "left_anti")
-
-    # 1a-audio (round 16): the audio twin — batch pool decodes once
-    # into a pinned hash table, reused by the audio index probe below.
-    anh_kept: DataFrame | None = None
-    if benchmark_audio_blobs is not None:
-        if new_audio_blobs is None:
-            raise ValueError(
-                "curate_incremental_batch: benchmark_audio_blobs "
-                "requires new_audio_blobs (the batch's audio)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            audio_hashes,
-            contaminated_image_ids,
-        )
-
-        anh_kept = audio_hashes(
-            new_audio_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=audio_backend,
-        ).localCheckpoint()
-        abh = audio_hashes(
-            benchmark_audio_blobs, backend=audio_backend
-        ).localCheckpoint()
-        abad = contaminated_image_ids(
-            anh_kept, abh, max_hamming=audio_max_hamming
-        ).select("doc_id")
-        kept = kept.join(abad, "doc_id", "left_anti")
-
-    # 1a-video (round 17): the video twin — batch pool decodes once
-    # into a pinned hash table, reused by the video index probe below.
-    vnh_kept: DataFrame | None = None
-    if benchmark_video_blobs is not None:
-        if new_video_blobs is None:
-            raise ValueError(
-                "curate_incremental_batch: benchmark_video_blobs "
-                "requires new_video_blobs (the batch's video)"
-            )
-        from data_pipeline_team5_spark.operators.multimodal import (
-            contaminated_image_ids,
-            video_hashes,
-        )
-
-        vnh_kept = video_hashes(
-            new_video_blobs.join(kept.select("doc_id"), "doc_id"),
-            backend=video_backend,
-        ).localCheckpoint()
-        vbh = video_hashes(
-            benchmark_video_blobs, backend=video_backend
-        ).localCheckpoint()
-        vbad = contaminated_image_ids(
-            vnh_kept, vbh, max_hamming=video_max_hamming
-        ).select("doc_id")
-        kept = kept.join(vbad, "doc_id", "left_anti")
+    # 1a. optional modality-grain decontamination (rounds 15-17): the
+    # batch's kept pool decodes ONCE per modality into a pinned hash
+    # table, reused by the index probes below (id semi-join), same as
+    # the full run.
+    legs = _modality_legs(
+        (new_image_blobs, new_audio_blobs, new_video_blobs),
+        (benchmark_image_blobs, benchmark_audio_blobs,
+         benchmark_video_blobs),
+        (image_backend, None, video_backend),
+        (perceptual_index_path, audio_index_path, video_index_path),
+    )
+    kept, pinned = _perceptual_decon(
+        kept, legs, "curate_incremental_batch", "new_"
+    )
 
     # 2. exact dedup: within the batch, then anti-join the corpus's keys —
     # probed from the stored key table when available (O(batch) probe)
@@ -1317,126 +1169,34 @@ def curate_incremental_batch(
             threshold=neardup_threshold,
             max_bucket=PRODUCTION_MAX_BUCKET,
         )
-    if (
-        new_image_blobs is not None
-        and perceptual_index_path is None
-        and benchmark_image_blobs is None
-    ):
-        raise ValueError(
-            "curate_incremental_batch: new_image_blobs requires "
-            "perceptual_index_path (build_perceptual_index) — the "
-            "daily loop never re-decodes the retained corpus's "
-            "images — and/or benchmark_image_blobs (decon-only)"
-        )
-    if new_image_blobs is not None and perceptual_index_path is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            perceptual_hashes,
-            perceptual_pairs_against_index,
-        )
-
-        idx = new_docs.sparkSession.read.parquet(perceptual_index_path)
-        if (
-            exclude_batch_id is not None
-            and "batch_id" in idx.columns
-        ):
+    # 3b. optional modality near-dup pairs against the stored hash
+    # indexes (rounds 15-17): the batch's payloads probe the retained
+    # corpus's 2-longs/doc index — the corpus's payloads are never
+    # re-decoded. A leg needs its index unless it only decontaminates.
+    for m, blobs, bench, backend, index_path in legs:
+        if blobs is None:
+            continue
+        if index_path is None:
+            if bench is None:
+                raise ValueError(
+                    f"curate_incremental_batch: new_{m.name}_blobs "
+                    f"requires {m.index}_index_path (build_hash_index) "
+                    "— the daily loop never re-decodes the retained "
+                    f"corpus's payloads — and/or benchmark_{m.name}_blobs "
+                    "(decon-only)"
+                )
+            continue
+        idx = new_docs.sparkSession.read.parquet(index_path)
+        if exclude_batch_id is not None and "batch_id" in idx.columns:
             idx = idx.filter(F.col("batch_id") != exclude_batch_id)
-        if nh_kept is not None:  # reuse the decon stage's decode pass
-            nh = nh_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            nh = perceptual_hashes(
-                new_image_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=image_backend,
-            ).localCheckpoint()
-        ipairs = perceptual_pairs_against_index(
-            nh,
+        mpairs = perceptual_pairs_against_index(
+            _pool_hashes(m, blobs, backend, pinned, uniq),
             idx.select("doc_id", "dhash", "ahash"),
-            max_hamming=image_max_hamming,
-            max_bucket=image_max_bucket,
+            max_hamming=MODALITY_MAX_HAMMING,
+            max_bucket=PERCEPTUAL_MAX_BUCKET,
         )
         raw_pairs = raw_pairs.select("doc_a", "doc_b").unionByName(
-            ipairs.select("doc_a", "doc_b")
-        )
-    # audio twin (round 16): the daily batch's WAVs probe the stored
-    # audio-hash index — the retained corpus's audio is never re-decoded
-    if (
-        new_audio_blobs is not None
-        and audio_index_path is None
-        and benchmark_audio_blobs is None
-    ):
-        raise ValueError(
-            "curate_incremental_batch: new_audio_blobs requires "
-            "audio_index_path (build_audio_index) — the daily loop "
-            "never re-decodes the retained corpus's audio — and/or "
-            "benchmark_audio_blobs (decon-only)"
-        )
-    if new_audio_blobs is not None and audio_index_path is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            audio_hashes,
-            perceptual_pairs_against_index,
-        )
-
-        aidx = new_docs.sparkSession.read.parquet(audio_index_path)
-        if (
-            exclude_batch_id is not None
-            and "batch_id" in aidx.columns
-        ):
-            aidx = aidx.filter(F.col("batch_id") != exclude_batch_id)
-        if anh_kept is not None:  # reuse the decon stage's decode
-            ah = anh_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            ah = audio_hashes(
-                new_audio_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=audio_backend,
-            ).localCheckpoint()
-        apairs = perceptual_pairs_against_index(
-            ah,
-            aidx.select("doc_id", "dhash", "ahash"),
-            max_hamming=audio_max_hamming,
-            max_bucket=audio_max_bucket,
-        )
-        raw_pairs = raw_pairs.select("doc_a", "doc_b").unionByName(
-            apairs.select("doc_a", "doc_b")
-        )
-    # video twin (round 17): the daily batch's containers probe the
-    # stored video-hash index — retained corpus video never re-decodes
-    if (
-        new_video_blobs is not None
-        and video_index_path is None
-        and benchmark_video_blobs is None
-    ):
-        raise ValueError(
-            "curate_incremental_batch: new_video_blobs requires "
-            "video_index_path (build_video_index) — the daily loop "
-            "never re-decodes the retained corpus's video — and/or "
-            "benchmark_video_blobs (decon-only)"
-        )
-    if new_video_blobs is not None and video_index_path is not None:
-        from data_pipeline_team5_spark.operators.multimodal import (
-            perceptual_pairs_against_index,
-            video_hashes,
-        )
-
-        vidx = new_docs.sparkSession.read.parquet(video_index_path)
-        if (
-            exclude_batch_id is not None
-            and "batch_id" in vidx.columns
-        ):
-            vidx = vidx.filter(F.col("batch_id") != exclude_batch_id)
-        if vnh_kept is not None:  # reuse the decon stage's decode
-            vh = vnh_kept.join(uniq.select("doc_id"), "doc_id")
-        else:
-            vh = video_hashes(
-                new_video_blobs.join(uniq.select("doc_id"), "doc_id"),
-                backend=video_backend,
-            ).localCheckpoint()
-        vpairs = perceptual_pairs_against_index(
-            vh,
-            vidx.select("doc_id", "dhash", "ahash"),
-            max_hamming=video_max_hamming,
-            max_bucket=video_max_bucket,
-        )
-        raw_pairs = raw_pairs.select("doc_a", "doc_b").unionByName(
-            vpairs.select("doc_a", "doc_b")
+            mpairs.select("doc_a", "doc_b")
         )
     # localCheckpoint (round 17, guide §2.4): the verified pair list is
     # consumed by corpus_in_pairs (twice — src and dst legs), the
@@ -1563,106 +1323,39 @@ def build_signature_index(
         doc_shingles(docs, id_col, text_col), num_perm=num_perm
     )
     if batch_id is not None:
-        (
-            sig.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
+        write_parquet_partitioned(
+            sig.withColumn("batch_id", F.lit(batch_id)), path, "batch_id"
         )
     else:
         sig.write.mode(mode).parquet(path)
 
 
-def build_perceptual_index(
-    image_blobs: DataFrame,
+def build_hash_index(
+    blobs: DataFrame,
     path: str,
-    backend: str = "bmp",
+    modality: str,
+    backend: str | None = None,
     mode: str = "overwrite",
     batch_id: str | None = None,
 ) -> None:
     """Materialize the corpus's perceptual-hash table (doc_id, dhash,
-    ahash) — the stored index the incremental image-dedup path probes
-    daily (round 15, VERDICT r14 #7; the image twin of
-    :func:`build_signature_index`).
+    ahash) for one ``MODALITIES`` entry — ``"image"``, ``"audio"`` or
+    ``"video"`` — the stored index the incremental dedup path probes
+    daily (rounds 15-17; the modality twin of
+    :func:`build_signature_index`). ``backend`` defaults to the table's.
 
     One Arrow-batched decode+hash pass over the blobs (the expensive
     step — exactly what the daily loop must never repeat for the
-    retained corpus), then a plain parquet write: 2 BIGINTs/doc, ~16
-    bytes — a 1e10-image corpus indexes in ~160 GB, independent of
-    image size. Same idempotent-replay contract as
-    ``build_signature_index`` via ``batch_id``."""
-    from data_pipeline_team5_spark.operators.multimodal import (
-        perceptual_hashes,
-    )
-
-    h = perceptual_hashes(image_blobs, backend=backend)
+    retained corpus; video's container decode, every frame, is the
+    costliest), then a plain parquet write: 2 BIGINTs/doc, ~16 bytes —
+    a 1e10-payload corpus indexes in ~160 GB, independent of payload
+    size. Same idempotent-replay contract as ``build_signature_index``
+    via ``batch_id``."""
+    m = MODALITIES[modality]
+    h = m.hashes(blobs, backend=backend or m.backend)
     if batch_id is not None:
-        (
-            h.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    else:
-        h.write.mode(mode).parquet(path)
-
-
-def build_audio_index(
-    audio_blobs: DataFrame,
-    path: str,
-    backend: str = "wav",
-    mode: str = "overwrite",
-    batch_id: str | None = None,
-) -> None:
-    """Materialize the corpus's audio-hash table (doc_id, dhash, ahash)
-    — the stored index the incremental audio-dedup path probes daily
-    (round 16; the audio twin of :func:`build_perceptual_index`, and
-    the same 2-BIGINTs/doc economics: the one decode pass is paid at
-    build/fold time, never per day)."""
-    from data_pipeline_team5_spark.operators.multimodal import (
-        audio_hashes,
-    )
-
-    h = audio_hashes(audio_blobs, backend=backend)
-    if batch_id is not None:
-        (
-            h.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    else:
-        h.write.mode(mode).parquet(path)
-
-
-def build_video_index(
-    video_blobs: DataFrame,
-    path: str,
-    backend: str = "container",
-    mode: str = "overwrite",
-    batch_id: str | None = None,
-) -> None:
-    """Materialize the corpus's video-hash table (doc_id, dhash, ahash)
-    — the stored index the incremental video-dedup path probes daily
-    (round 17; the video twin of :func:`build_perceptual_index`, same
-    2-BIGINTs/doc economics: the one container-decode pass — the
-    costliest of the three modalities, every frame decodes — is paid at
-    build/fold time, never per day)."""
-    from data_pipeline_team5_spark.operators.multimodal import (
-        video_hashes,
-    )
-
-    h = video_hashes(video_blobs, backend=backend)
-    if batch_id is not None:
-        (
-            h.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
+        write_parquet_partitioned(
+            h.withColumn("batch_id", F.lit(batch_id)), path, "batch_id"
         )
     else:
         h.write.mode(mode).parquet(path)
@@ -1683,12 +1376,8 @@ def build_exact_key_index(
     ``build_signature_index`` via ``batch_id``."""
     keys = docs.select(exact_key(text_col).alias("_key")).distinct()
     if batch_id is not None:
-        (
-            keys.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
+        write_parquet_partitioned(
+            keys.withColumn("batch_id", F.lit(batch_id)), path, "batch_id"
         )
     else:
         keys.write.mode(mode).parquet(path)
@@ -1707,12 +1396,8 @@ def append_corpus_batch(
     reference docs whose text the verify stage cannot see — near-dups of
     folded survivors would be silently KEPT (ADVICE r6 #1; the loud
     runtime guard is in ``neardup_incremental_against_index``)."""
-    (
-        docs.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+    write_parquet_partitioned(
+        docs.withColumn("batch_id", F.lit(batch_id)), path, "batch_id"
     )
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -2003,30 +2004,42 @@ def test_cli_three_modality_full_and_fold(spark, tmp_path, capsys):
         [(900003, _video_payload(92))], "doc_id LONG, blob BINARY"
     ).write.parquet(vbench)
 
+    def seed(s, ih, ah, vh):
+        _run(capsys, ["init-corpus", "--docs", p0, "--corpus", s["corpus"]])
+        r = _run(capsys, [
+            "build-index", "--docs", p0, "--sig", s["sig"],
+            "--key", s["key"],
+            "--image-blobs", str(tmp_path / "iblobs0.parquet"),
+            "--perceptual", ih,
+            "--audio-blobs", str(tmp_path / "ablobs0.parquet"),
+            "--audio-index", ah,
+            "--video-blobs", str(tmp_path / "vblobs0.parquet"),
+            "--video-index", vh,
+        ])
+        # the summary names every index it wrote
+        assert (r["perceptual"], r["audio_index"], r["video_index"]) == (
+            ih, ah, vh
+        )
+
+    def modality_argv(ih, ah, vh):
+        return [
+            "--benchmark", tbench,
+            "--image-blobs", iblobs, "--perceptual-index", ih,
+            "--image-benchmark", ibench,
+            "--audio-blobs", ablobs, "--audio-index", ah,
+            "--audio-benchmark", abench,
+            "--video-blobs", vblobs, "--video-index", vh,
+            "--video-benchmark", vbench,
+        ]
+
     s = _store_args(tmp_path)
     ih = str(tmp_path / "ihash")
     ah = str(tmp_path / "ahash")
     vh = str(tmp_path / "vhash")
-    _run(capsys, ["init-corpus", "--docs", p0, "--corpus", s["corpus"]])
-    _run(capsys, [
-        "build-index", "--docs", p0, "--sig", s["sig"],
-        "--key", s["key"],
-        "--image-blobs", str(tmp_path / "iblobs0.parquet"),
-        "--perceptual", ih,
-        "--audio-blobs", str(tmp_path / "ablobs0.parquet"),
-        "--audio-index", ah,
-        "--video-blobs", str(tmp_path / "vblobs0.parquet"),
-        "--video-index", vh,
-    ])
-    summary = _run(capsys, _inc_argv(s, p1, "day1") + [
-        "--benchmark", tbench,
-        "--image-blobs", iblobs, "--perceptual-index", ih,
-        "--image-benchmark", ibench,
-        "--audio-blobs", ablobs, "--audio-index", ah,
-        "--audio-benchmark", abench,
-        "--video-blobs", vblobs, "--video-index", vh,
-        "--video-benchmark", vbench,
-    ])
+    seed(s, ih, ah, vh)
+    summary = _run(
+        capsys, _inc_argv(s, p1, "day1") + modality_argv(ih, ah, vh)
+    )
     kept = {
         r["doc_id"]
         for r in spark.read.parquet(s["out"])
@@ -2062,6 +2075,89 @@ def test_cli_three_modality_full_and_fold(spark, tmp_path, capsys):
         os.path.join(s["out"], "_manifest", "day1.json")
     ))
     assert mf["fold"] == "day1" and mf["kept"] == 1
+
+    # stream runs the same fold: the day-1 file as ONE arrival into
+    # fresh stores, every modality flag on, gives the same survivor,
+    # grows the same six stores and writes one manifest row
+    s2 = {k: f"{v}_stream" for k, v in s.items()}
+    ih2, ah2, vh2 = (f"{p}_stream" for p in (ih, ah, vh))
+    seed(s2, ih2, ah2, vh2)
+    arrivals = tmp_path / "arrivals"
+    arrivals.mkdir()
+    stage = tmp_path / "stage_day1"
+    spark.read.parquet(p1).coalesce(1).write.parquet(str(stage))
+    next(
+        p for p in stage.iterdir() if p.name.endswith(".parquet")
+    ).rename(arrivals / "day1.parquet")
+    r = _run(capsys, [
+        "stream", "--arrivals", str(arrivals), "--corpus", s2["corpus"],
+        "--sig", s2["sig"], "--key", s2["key"], "--out", s2["out"],
+    ] + modality_argv(ih2, ah2, vh2))
+    assert r["batches"] == ["s0"], r
+    assert {
+        x["doc_id"] for x in spark.read.parquet(s2["out"]).collect()
+    } == {2007}
+    for store in (s2["sig"], s2["key"], ih2, ah2, vh2, s2["corpus"]):
+        part = spark.read.parquet(store).filter(F.col("batch_id") == "s0")
+        assert part.count() == 1, store
+        if "doc_id" in part.columns:
+            assert part.first()["doc_id"] == 2007, store
+    assert os.listdir(os.path.join(s2["out"], "_manifest")) == ["s0.json"]
+
+
+# Each subcommand's option surface as it stood when the per-modality
+# flags were still written out by hand, one add_argument per flag.
+_FLAG_SURFACE = {
+    "full": [
+        "--audio-benchmark", "--audio-blobs", "--benchmark", "--bpe-fit",
+        "--bpe-merges-out", "--budget", "--decon-bloom-min-grams",
+        "--decon-n", "--docs", "--help", "--image-backend",
+        "--image-benchmark", "--image-blobs", "--langid-fill",
+        "--langid-model-out", "--method", "--out", "--quality-filter",
+        "--quality-model-out", "--quality-per-lang", "--quality-reference",
+        "--scrub-pii", "--source-priority", "--survivor-policy",
+        "--threshold", "--video-backend", "--video-benchmark",
+        "--video-blobs",
+    ],
+    "build-index": [
+        "--audio-blobs", "--audio-index", "--batch-id", "--docs", "--help",
+        "--image-backend", "--image-blobs", "--key", "--perceptual", "--sig",
+        "--video-backend", "--video-blobs", "--video-index",
+    ],
+    "incremental": [
+        "--audio-benchmark", "--audio-blobs", "--audio-index", "--benchmark",
+        "--bpe-merges", "--budget", "--corpus", "--decon-bloom-min-grams",
+        "--decon-n", "--fold-batch-id", "--help", "--image-backend",
+        "--image-benchmark", "--image-blobs", "--key", "--langid-model",
+        "--new", "--out", "--perceptual-index", "--quality-model",
+        "--report-drift", "--sig", "--threshold", "--video-backend",
+        "--video-benchmark", "--video-blobs", "--video-index",
+    ],
+    "stream": [
+        "--arrivals", "--audio-benchmark", "--audio-blobs", "--audio-index",
+        "--benchmark", "--bpe-merges", "--budget", "--checkpoint",
+        "--corpus", "--decon-bloom-min-grams", "--decon-n", "--help",
+        "--image-backend", "--image-benchmark", "--image-blobs", "--key",
+        "--langid-model", "--out", "--perceptual-index", "--quality-model",
+        "--shard-root", "--sig", "--threshold", "--video-backend",
+        "--video-benchmark", "--video-blobs", "--video-index",
+    ],
+}
+
+
+@pytest.mark.parametrize("cmd", sorted(_FLAG_SURFACE))
+def test_cli_flag_surface_golden(cmd, capsys):
+    """The per-modality flags are generated from the modality table;
+    every subcommand must still offer exactly the hand-written option
+    set, including build-index's bare --perceptual next to the other
+    subcommands' --perceptual-index and the absent --audio-backend."""
+    with pytest.raises(SystemExit) as ex:
+        main([cmd, "--help"])
+    assert ex.value.code == 0
+    flags = re.findall(
+        r"^  (?:-\w, )?(--[a-z][a-z0-9-]*)", capsys.readouterr().out, re.M
+    )
+    assert sorted(flags) == _FLAG_SURFACE[cmd]
 
 
 def test_cli_audio_benchmark_decon_only(spark, tmp_path, capsys):

@@ -738,7 +738,7 @@ def test_incremental_image_dedup_probes_stored_index(spark, tmp_path):
     import pytest as _pytest
 
     from data_pipeline_team5_spark.pipeline import (
-        build_perceptual_index,
+        build_hash_index,
         curate_incremental_batch,
     )
 
@@ -760,7 +760,7 @@ def test_incremental_image_dedup_probes_stored_index(spark, tmp_path):
     assert plain == {2, 3, 4}  # precondition: text stages keep all
 
     idx = str(tmp_path / "phash")
-    build_perceptual_index(corpus_blobs, idx, batch_id="base")
+    build_hash_index(corpus_blobs, idx, "image", batch_id="base")
     out = {
         r["doc_id"]
         for r in curate_incremental_batch(
@@ -1062,7 +1062,7 @@ def test_incremental_audio_dedup_probes_stored_index(spark, tmp_path):
     import pytest as _pytest
 
     from data_pipeline_team5_spark.pipeline import (
-        build_audio_index,
+        build_hash_index,
         curate_incremental_batch,
     )
 
@@ -1080,7 +1080,7 @@ def test_incremental_audio_dedup_probes_stored_index(spark, tmp_path):
     )  # doc 4 has no audio
 
     idx = str(tmp_path / "ahash")
-    build_audio_index(corpus_blobs, idx, batch_id="base")
+    build_hash_index(corpus_blobs, idx, "audio", batch_id="base")
     out = {
         r["doc_id"]
         for r in curate_incremental_batch(

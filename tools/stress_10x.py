@@ -806,7 +806,7 @@ def main_perceptual() -> None:
         perceptual_pairs,
         perceptual_pairs_against_index,
     )
-    from data_pipeline_team5_spark.pipeline import build_perceptual_index
+    from data_pipeline_team5_spark.pipeline import build_hash_index
     from data_pipeline_team5_spark.session import get_spark
 
     build()
@@ -840,7 +840,7 @@ def main_perceptual() -> None:
         with tempfile.TemporaryDirectory() as tmp:
             idx_path = f"{tmp}/phash"
             t_index_build = _timed(
-                build_perceptual_index, corpus_blobs, idx_path
+                build_hash_index, corpus_blobs, idx_path, "image"
             )
             idx = spark.read.parquet(idx_path)
 
